@@ -11,6 +11,7 @@ from __future__ import annotations
 
 import math
 import os
+import uuid
 
 import duckdb
 import pytest
@@ -41,6 +42,24 @@ def ducks():
     yield con
     con.close()
 
+
+def count_spark_jobs(spark, fn):
+    """Run ``fn()`` and return ``(its result, the number of Spark jobs it
+    started)``. The jobs are attributed through a fresh job group; the
+    listener bus is drained before the status tracker is asked, so a job
+    that has already finished cannot be missed."""
+    sc = spark.sparkContext
+    group = f"count_spark_jobs-{uuid.uuid4().hex}"
+    props = ("spark.jobGroup.id", "spark.job.description", "spark.job.interruptOnCancel")
+    saved = {k: sc.getLocalProperty(k) for k in props}
+    sc.setJobGroup(group, "count_spark_jobs")
+    try:
+        result = fn()
+    finally:
+        for k, v in saved.items():
+            sc.setLocalProperty(k, v)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    return result, len(sc.statusTracker().getJobIdsForGroup(group))
 
 def _norm(v):
     """Normalize a cell for comparison across engines."""
